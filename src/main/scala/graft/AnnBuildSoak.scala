@@ -59,6 +59,11 @@ object AnnBuildSoak {
       .sortBy { case (cid, cv) => (-Similarity.dotRound4(q, cv), cid) }
       .take(np).map(_._1).toSeq
 
+  /** Int8 cell-probe candidates (query_id, vec_id, cell, cos_q) of an
+    * index relation; callers rank them with topK or boundedTopK. */
+  private def int8Cands(rows: DataFrame, qcells: DataFrame): DataFrame =
+    Similarity.cellProbe(rows, qcells, Similarity.cosI8, "cos_q")
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(5000000L)
     val out = sys.env.getOrElse("SPARK_GRAFT_ANNSOAK_OUT", "BENCH_annsoak.json")
@@ -169,7 +174,7 @@ object AnnBuildSoak {
       val qcells = probeDf.join(qfeat, "query_id")
       val serveRuns = (1 to 7).map { _ =>
         val (n5, t) = timed {
-          Similarity.frozenInt8Serve(pt.read(spark), qcells).count()
+          Similarity.topK(int8Cands(pt.read(spark), qcells), "cos_q", 5).count()
         }
         require(n5 == 5L * NQueries, s"serve returned $n5 rows")
         t
@@ -213,7 +218,7 @@ object AnnBuildSoak {
       spark.sparkContext.addSparkListener(listener)
       def drain(): Unit =
         org.apache.spark.graftbridge.ListenerFlush.waitUntilEmpty(spark.sparkContext)
-      val servedOnce = Similarity.frozenInt8Serve(pt.read(spark), qcells)
+      val servedOnce = Similarity.topK(int8Cands(pt.read(spark), qcells), "cos_q", 5)
       servedOnce.collect() // finalize the AQE plan outside timing
       val reusedRuns = (1 to 7).map { _ =>
         drain()
@@ -284,14 +289,13 @@ object AnnBuildSoak {
           }.sorted
           runs(runs.length / 2)
         }
-        // r16: the production batched kernel (two-level bounded-heap
-        // top-5 — the rank shuffle carries ≤ 5·|batch|·partitions
-        // rows) vs the window kernel it replaced (shuffles+sorts
-        // EVERY candidate pair — the measured wall behind r15's
-        // 217 qps plateau at 4096 q/probe)
-        val p50 = p50Of(Similarity.frozenInt8ServeBatched(pinned, qc).count())
+        // the serve sessions' boundedTopK (the rank shuffle carries
+        // ≤ 5·|batch|·partitions rows) vs the plain topK window
+        // (shuffles+sorts EVERY candidate pair — the measured wall
+        // behind r15's 217 qps plateau at 4096 q/probe)
+        val p50 = p50Of(Similarity.boundedTopK(int8Cands(pinned, qc), "cos_q", 5).count())
         if (b == maxB) single4096P50 = p50
-        val p50W = p50Of(Similarity.frozenInt8Serve(pinned, qc).count())
+        val p50W = p50Of(Similarity.topK(int8Cands(pinned, qc), "cos_q", 5).count())
         println(f"[annsoak] serve_batched b=$b p50=$p50%.3f s qps=${b / p50}%.0f " +
           f"(window kernel p50=$p50W%.3f s qps=${b / p50W}%.0f)")
         s"""{"batch":$b,"p50_s":${f"$p50%.3f"},"qps":${(b / p50).toLong},""" +
@@ -339,7 +343,7 @@ object AnnBuildSoak {
         scala.concurrent.ExecutionContext.global
       def shardedProbe(): Seq[(Long, Long, Double)] = {
         val fs = (0 until NShards).map { sh =>
-          Future(Similarity.frozenInt8ServeBatched(shardPins(sh), qcShards(sh))
+          Future(Similarity.boundedTopK(int8Cands(shardPins(sh), qcShards(sh)), "cos_q", 5)
             .select(col("query_id"), col("vec_id"), col("cos_q")).collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
         }
@@ -353,7 +357,7 @@ object AnnBuildSoak {
       val shardRuns = (1 to 5).map { _ => timed(shardedProbe()) }
       val shardP50 = shardRuns.map(_._2).sorted.apply(2)
       // semantics: the sharded merge equals the single-session kernel
-      val singleRows = Similarity.frozenInt8ServeBatched(pinned, qcAll)
+      val singleRows = Similarity.boundedTopK(int8Cands(pinned, qcAll), "cos_q", 5)
         .select(col("query_id"), col("vec_id"), col("cos_q")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       require(shardRuns.head._1.toSet == singleRows,
@@ -375,12 +379,8 @@ object AnnBuildSoak {
       // next to the steady serve — the consistency contract's price.
       // Open pins the latest snapshot (readAt + persist + count);
       // a maintain commit lands underneath; refresh() re-pins.
-      def sessQcells(q: DataFrame): DataFrame = {
-        val (sc, sq) = Similarity.quantizeCols(col("embedding"))
-        q.select(col("query_id"),
-          graft.functions.ImiCell2.cell(col("embedding"), supers, groups)
-            .as("qcell"), sc.as("q_scale"), sq.as("qq"))
-      }
+      def sessQcells(q: DataFrame): DataFrame =
+        Similarity.int8Probes(q, graft.functions.ImiCell2.cell(_, supers, groups))
       val sessQueries = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("query_id"), col("embedding"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

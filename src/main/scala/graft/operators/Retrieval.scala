@@ -84,30 +84,6 @@ object Retrieval {
         .as("t_grams"))
   }
 
-  /** The same totals derived from the postings relation instead of a
-    * second corpus scan: every doc with ≥ GramK words appears in
-    * `postingsOf` with Σ tf = dl grams, so
-    *   n_docs  = count of distinct doc_id over postings
-    *   t_grams = Σ dl over those docs (= Σ tf over all postings).
-    * Exact equality with `totalsOf(docs)` for any corpus (docs below
-    * GramK words contribute 0 to both sides; RetrievalSpec pins it).
-    *
-    * EXAMINED AND NOT WIRED (r18, guide §1 measure-first): sharing the
-    * `postingsOf` subtree does make AQE reuse the postings exchange —
-    * the plan drops to ONE corpus pass and the bench's bytes-read
-    * halves (141 → 70 KB/run at sf0.1) — but the query got SLOWER
-    * (0.96 → 1.71 s median, non-overlapping 7-sample ranges), because
-    * the replaced totals scan was a ~free column-pruned row-local
-    * aggregate running in parallel, while this form re-reads and
-    * re-aggregates the postings shuffle a second time behind three
-    * extra sequential AQE stage barriers. At 100 TB the trade is no
-    * better: the postings exchange carries more bytes than the pruned
-    * text column. The narrow totals scan IS the optimal shape; kept
-    * here with its equality spec as the record of the examination. */
-  private[graft] def totalsFromPostings(postings: DataFrame): DataFrame =
-    postings.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl2"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl2")).as("t_grams"))
-
   /** Query-side term table (query_id, g), distinct — tiny: broadcasts. */
   private[graft] def queryGramsOf(docs: DataFrame,
       ids: Seq[Long] = QueryDocs): DataFrame =
@@ -181,11 +157,7 @@ object Retrieval {
 
   private[graft] def bm25Of(postings: DataFrame, totals: DataFrame,
       qterms: DataFrame, k: Int = 10): DataFrame =
-    bm25Scores(postings, totals, qterms)
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score_x1000").desc, col("doc_id").asc)))
-      .filter(col("rnk") <= k)
+    Similarity.topK(bm25Scores(postings, totals, qterms), "score_x1000", k, id = "doc_id")
 
   /** BM25 top-10 per query over the documents corpus: postings built
     * in-query (the ad-hoc form; `text_bm25_bucketed` serves the same
@@ -209,7 +181,7 @@ object Retrieval {
       .select(col("doc_id").as("query_id"), col("g"))
     val inter = t.join(broadcast(q), Seq("g"))
       .groupBy(col("query_id"), col("doc_id")).agg(count(lit(1)).as("i"))
-    inter
+    Similarity.topK(inter
       .join(sz.select(col("doc_id").as("query_id"), col("n").as("nq")),
         Seq("query_id"))
       .join(sz.select(col("doc_id"), col("n").as("nd")), Seq("doc_id"))
@@ -222,11 +194,7 @@ object Retrieval {
       // so their keys differ by ≥ 1 (floor preserves strict order);
       // equal rationals floor to equal keys. i·U² ≤ 2^60 fits a long.
       .withColumn("jkey", expr(
-        s"(i * ${1L << 40}L) div (nq + nd - i)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("jkey").desc, col("doc_id").asc)))
-      .filter(col("rnk") <= k)
+        s"(i * ${1L << 40}L) div (nq + nd - i)")), "jkey", k, id = "doc_id")
       .select(col("query_id"), col("doc_id"), col("rnk"))
   }
 
@@ -303,7 +271,7 @@ object Retrieval {
     *
     * Scale shape: both inputs are the already-audited efficient
     * forms — the pruned-postings BM25 and `sim_topk`'s two-level
-    * bounded-heap scan (reused via simTopkFor, not re-derived) — and
+    * `boundedTopK` scan (reused via simTopkFor, not re-derived) — and
     * the fusion itself touches only 2·k·|queries| rows. */
   def simHybridRrf(s: SparkSession, d: String): DataFrame =
     simHybridRrfFor(s, d, QueryDocs)
@@ -317,17 +285,14 @@ object Retrieval {
   private[graft] def sparseTopFor(s: SparkSession, d: String,
       ids: Seq[Long], k: Int = 10): DataFrame = {
     val docs = documents(s, d)
-    bm25Scores(postingsOf(docs), totalsOf(docs), queryGramsOf(docs, ids))
-      .filter(col("doc_id") =!= col("query_id"))
-      .withColumn("srnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score_x1000").desc, col("doc_id").asc)))
-      .filter(col("srnk") <= k)
+    Similarity.topK(bm25Scores(postingsOf(docs), totalsOf(docs), queryGramsOf(docs, ids))
+        .filter(col("doc_id") =!= col("query_id")),
+        "score_x1000", k, id = "doc_id", rank = "srnk")
       .select(col("query_id"), col("doc_id"), col("srnk"))
   }
 
   /** Self-excluded EXACT dense top-10 (query_id, doc_id, drnk) — the
-    * bounded-heap brute-force scan. */
+    * `boundedTopK` brute-force scan. */
   private[graft] def denseTopExactFor(s: SparkSession, d: String,
       ids: Seq[Long]): DataFrame = {
     val qv = embeddings(s, d).filter(col("vec_id").isInCollection(ids))
@@ -340,15 +305,11 @@ object Retrieval {
     * (Cormack et al. 2009, k=60): rrf_x1m = Σ 1e6 DIV (60 + rank). */
   private[graft] def fuseRrf(sparse: DataFrame, dense: DataFrame,
       k: Int = 10): DataFrame =
-    sparse.join(dense, Seq("query_id", "doc_id"), "full")
+    Similarity.topK(sparse.join(dense, Seq("query_id", "doc_id"), "full")
       .select(col("query_id"), col("doc_id"),
         (coalesce(expr("CAST(1000000 DIV (60 + srnk) AS BIGINT)"), lit(0L)) +
          coalesce(expr("CAST(1000000 DIV (60 + drnk) AS BIGINT)"), lit(0L)))
-          .as("rrf_x1m"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("rrf_x1m").desc, col("doc_id").asc)))
-      .filter(col("rnk") <= k)
+          .as("rrf_x1m")), "rrf_x1m", k, id = "doc_id")
 
   /** The hybrid at INDEX scale — `sim_hybrid_rrf` with the dense side
     * served from the ANN index instead of the exact scan: the exact
@@ -373,23 +334,12 @@ object Retrieval {
       ids: Seq[Long], k: Int = 10): DataFrame = {
     val e = graft.Tables.embeddings(s, d)
     val cellOf = Similarity.imiCellOf(s, d) _
-    val (csc, cq) = Similarity.quantizeCols(col("embedding"))
-    val cells = e.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
-      csc.as("c_scale"), cq.as("cq"))
-    val qcells = e.filter(col("vec_id").isInCollection(ids))
-      .select(col("vec_id").as("query_id"), cellOf(col("embedding")).as("qcell"),
-        Similarity.quantizeCols(col("embedding"))._1.as("q_scale"),
-        Similarity.quantizeCols(col("embedding"))._2.as("qq"))
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        Similarity.cosQ(qdot).as("cos_q"))
-      .withColumn("drnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_q").desc, col("doc_id").asc)))
-      .filter(col("drnk") <= k)
-      .select(col("query_id"), col("doc_id"), col("drnk"))
+    val qs = e.filter(col("vec_id").isInCollection(ids))
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    Similarity.topK(Similarity.cellProbe(Similarity.int8Rows(e, cellOf),
+        Similarity.int8Probes(qs, cellOf), Similarity.cosI8, "cos_q"),
+        "cos_q", k, rank = "drnk")
+      .select(col("query_id"), col("vec_id").as("doc_id"), col("drnk"))
   }
 
   // ---- streaming serve over the persisted index ----------------------

@@ -132,34 +132,22 @@ final class AnnServeSession private[operators] (s: SparkSession, d: String) {
 
   private val cellOf = imiCellOf(s, d) _
 
-  private def qcellsOf(queries: DataFrame): DataFrame = {
-    // bind the quantizer ONCE per serve plan: two quantizeCols calls
-    // would build the expression twice and lean on codegen
-    // subexpression elimination to dodge double per-row work (r15
-    // VERDICT minor 4a)
-    val (qScale, qq) = quantizeCols(col("embedding"))
-    queries.select(col("query_id"),
-      cellOf(col("embedding")).as("qcell"),
-      qScale.as("q_scale"), qq.as("qq"))
-  }
-
   /** One probe of an AD-HOC query batch: quantize the QUERY side only,
-    * then the frozen-int8 serve kernel against the pinned code
-    * relation. The batch's query_id namespace is the caller's — NO
-    * self-exclusion (a collision with a corpus vec_id must not drop
-    * that vector; r15 ADVICE). */
+    * cell-probe the pinned code relation, `boundedTopK` the top-5. The
+    * batch's query_id namespace is the caller's — NO self-exclusion (a
+    * collision with a corpus vec_id must not drop that vector). */
   def serve(queries: DataFrame): DataFrame =
-    frozenInt8ServeBatched(index, qcellsOf(queries), excludeSelf = false)
+    boundedTopK(cellProbe(index, int8Probes(queries, cellOf), cosI8, "cos_q",
+      excludeSelf = false), "cos_q", 5)
 
   /** Convenience: serve corpus vectors by id (the gate entries'
     * query shape — query ids ARE corpus vec_ids, so self-exclusion
     * applies, exactly as in the one-shot entries). */
   def serveIds(ids: Seq[Long]): DataFrame =
-    frozenInt8ServeBatched(index, qcellsOf(
-      graft.Tables.embeddings(s, d)
+    boundedTopK(cellProbe(index, int8Probes(graft.Tables.embeddings(s, d)
         .filter(col("vec_id").isInCollection(ids))
-        .select(col("vec_id").as("query_id"), col("embedding"))),
-      excludeSelf = true)
+        .select(col("vec_id").as("query_id"), col("embedding")), cellOf),
+      cosI8, "cos_q"), "cos_q", 5)
 
   def close(): Unit = { index.unpersist(); () }
 }
@@ -229,15 +217,15 @@ final class MaintainedAnnServeSession private[operators] (
 
   /** Ad-hoc (query_id, embedding) batch against the pinned snapshot —
     * no self-exclusion (caller id namespace). */
-  def serve(queries: DataFrame): DataFrame =
-    Similarity.frozenInt8ServeBatched(pinned, qcellsOf(queries),
-      excludeSelf = false)
+  def serve(queries: DataFrame): DataFrame = serveOf(queries, excludeSelf = false)
 
   /** Corpus-id queries against the pinned snapshot (self-excluding —
     * the `stream_ann_maintain` gate shape). */
-  def serveIds(queries: DataFrame): DataFrame =
-    Similarity.frozenInt8ServeBatched(pinned, qcellsOf(queries),
-      excludeSelf = true)
+  def serveIds(queries: DataFrame): DataFrame = serveOf(queries, excludeSelf = true)
+
+  private def serveOf(queries: DataFrame, excludeSelf: Boolean): DataFrame =
+    Similarity.boundedTopK(Similarity.cellProbe(pinned, qcellsOf(queries),
+      Similarity.cosI8, "cos_q", excludeSelf = excludeSelf), "cos_q", 5)
 
   /** True when the table head has moved past the pin — one directory
     * listing, cheap enough for a serve loop to poll between batches

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -16,10 +16,10 @@ import graft.Tables._
   * Scale design:
   *  - The query side is tiny and broadcast; the corpus side never
   *    shuffles for the brute-force scan (map-side dot products +
-  *    TakeOrderedAndProject-style per-query top-k).
-  *  - LSH/IVF turn the cross product into an equi-join on
-  *    bucket/cell id — the corpus is hash-partitioned by cell, each
-  *    query probes one cell.
+  *    `boundedTopK`'s per-partition heaps).
+  *  - LSH/IVF/PQ turn the cross product into `cellProbe`'s equi-join
+  *    on bucket/cell id — each query probes its own cell(s).
+  *  - Every form ranks through the one rule in `topK`.
   *  - Dot products are explicit left-to-right double folds
   *    (`zip_with` + `aggregate`): deterministic, engine-portable, and
   *    at 100 TB immune to partitioning-dependent float reordering.
@@ -247,50 +247,93 @@ object Similarity {
 
   val imiCellsCteSql: String = imiCellsCteSqlFor("TRUE")
 
+  // ---- the shared retrieval tail: candidates → per-query top-k -------
+  //
+  // Every vector and hybrid top-k is one pipeline: a front end
+  // generates scored candidates (exact scan, cell probe, ADC, BM25,
+  // fusion), then a bounded per-query top-k keeps the best k. Only the
+  // front end differs between forms; the rank rule lives here once.
+
+  /** THE per-query rank rule: `row_number` over `query_id`, ordered by
+    * `score` desc then `id` asc, keeping `rank <= k`. Ids are unique
+    * per query, so the order is total and every form — window, heap,
+    * oracle SQL — keeps the same rows, ties included. */
+  private[graft] def topK(scored: DataFrame, score: String, k: Int,
+      id: String = "vec_id", rank: String = "rnk"): DataFrame =
+    scored.withColumn(rank, row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col(score).desc, col(id).asc)))
+      .filter(col(rank) <= k)
+
+  /** `topK` for CORPUS-SIZED candidate sets (the exact scans and large
+    * serve batches): each scan task first keeps at most k rows per
+    * query in a bounded heap (mapPartitions — no shuffle), so only
+    * k·partitions·queries rows reach the `topK` window instead of a
+    * corpus-sized shuffle into #queries reducers. Heaps hold whole
+    * rows, so carry columns (`qdot`, `cell`) ride along. The heap order
+    * is topK's — score desc under the Double total order, then id asc —
+    * so both keep the same rows. `score` must be DOUBLE and `id` BIGINT.
+    * Single-cell probes keep the plain window: their candidate sets are
+    * cell-sized, and PlanAudit pins which forms take which path. */
+  private[graft] def boundedTopK(scored: DataFrame, score: String, k: Int,
+      id: String = "vec_id", rank: String = "rnk"): DataFrame = {
+    val schema = scored.schema
+    require(schema(score).dataType == DoubleType && schema(id).dataType == LongType,
+      s"boundedTopK ranks a DOUBLE score by a BIGINT id: ${schema.simpleString}")
+    val (qi, si, ii) =
+      (schema.fieldIndex("query_id"), schema.fieldIndex(score), schema.fieldIndex(id))
+    // worst-first: the heap head is the row that falls out
+    val worstFirst: Ordering[Row] = new Ordering[Row] {
+      def compare(a: Row, b: Row): Int = {
+        val c = java.lang.Double.compare(b.getDouble(si), a.getDouble(si))
+        if (c != 0) c else java.lang.Long.compare(a.getLong(ii), b.getLong(ii))
+      }
+    }
+    val partial = scored.mapPartitions { (it: Iterator[Row]) =>
+      val heaps = scala.collection.mutable.Map
+        .empty[Long, scala.collection.mutable.PriorityQueue[Row]]
+      it.foreach { r =>
+        val h = heaps.getOrElseUpdate(r.getLong(qi),
+          scala.collection.mutable.PriorityQueue.empty(worstFirst))
+        if (h.size < k) h.enqueue(r)
+        else if (worstFirst.gt(h.head, r)) { h.dequeue(); h.enqueue(r) }
+      }
+      heaps.valuesIterator.flatMap(_.iterator)
+    }(org.apache.spark.sql.Encoders.row(schema))
+    topK(partial, score, k, id, rank)
+  }
+
+  /** THE cell-probe scorer of every IVF/LSH/PQ/int8 form: corpus rows
+    * meet the tiny broadcast probe table on `key === probeKey` (a
+    * multi-probe form just carries more probe rows per query) and come
+    * out scored as (query_id, vec_id, key, scoreName). `excludeSelf` is
+    * the CORPUS-QUERY convention (query ids ARE corpus vec_ids, so a
+    * vector must not match itself). An AD-HOC query batch passes false:
+    * its query_id namespace is the caller's, and a collision with a
+    * corpus vec_id would silently drop that vector from the candidate
+    * set (ServeSessionSpec pins the colliding-id case). */
+  private[graft] def cellProbe(corpus: DataFrame, probes: DataFrame,
+      score: Column, scoreName: String, key: String = "cell",
+      probeKey: String = "qcell", excludeSelf: Boolean = true): DataFrame = {
+    val onKey = col(key) === col(probeKey)
+    corpus.join(broadcast(probes),
+        if (excludeSelf) onKey && col("vec_id") =!= col("query_id") else onKey)
+      .select(col("query_id"), col("vec_id"), col(key), score.as(scoreName))
+  }
+
   /** Exact brute-force top-10 cosine neighbors for each of 3 query
-    * vectors: broadcast queries × corpus scan, then TWO-LEVEL top-k.
-    * Each scan task keeps at most k rows per query in a bounded heap
-    * (mapPartitions — no shuffle), so only k·partitions·queries rows
-    * reach the final per-query rank window. The corpus-sized shuffle
-    * into #queries reducers that a direct window would cost is gone;
-    * at 100 TB the heavy stage is embarrassingly parallel and the
-    * merge input is KB-sized. Ties broken by vec_id, identical to the
-    * single-window form. */
+    * vectors: broadcast queries × corpus scan, then `boundedTopK` — at
+    * 100 TB the heavy stage is embarrassingly parallel and the rank
+    * window's input is KB-sized. */
   def simTopk(s: SparkSession, d: String): DataFrame =
     simTopkFor(s, d, queryVectors(s, d))
 
-  /** The exact top-k against an arbitrary (query_id, q) vector set —
-    * the same two-level bounded-heap shape; Retrieval's hybrid
-    * fusion reuses it for its own query ids. */
+  /** The exact top-k against an arbitrary (query_id, q) vector set;
+    * Retrieval's hybrid fusion reuses it for its own query ids. */
   private[graft] def simTopkFor(s: SparkSession, d: String,
-      qs: DataFrame): DataFrame = {
-    import s.implicits._
-    val k = 10
-    val corpus = embeddings(s, d)
-    val scored = corpus.join(broadcast(qs),
-        col("vec_id") =!= col("query_id"))
+      qs: DataFrame): DataFrame =
+    boundedTopK(embeddings(s, d).join(broadcast(qs), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(dot(col("q"), col("embedding")), 4).as("cos_r"))
-    // worst-first ordering: the heap head is the row that falls out
-    val worstFirst: Ordering[(Double, Long)] =
-      Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long)
-    val partial = scored.as[(Long, Long, Double)].mapPartitions { it =>
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-      it.foreach { case (q, v, c) =>
-        val h = heaps.getOrElseUpdate(q,
-          scala.collection.mutable.PriorityQueue.empty(worstFirst))
-        if (h.size < k) h.enqueue((c, v))
-        else if (worstFirst.gt(h.head, (c, v))) { h.dequeue(); h.enqueue((c, v)) }
-      }
-      heaps.iterator.flatMap { case (q, h) =>
-        h.iterator.map { case (c, v) => (q, v, c) } }
-    }.toDF("query_id", "vec_id", "cos_r")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    partial.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
+        round(dot(col("q"), col("embedding")), 4).as("cos_r")), "cos_r", 10)
 
   /** Random-hyperplane LSH: 8 data-derived hyperplanes (vectors
     * 100..107) → 8 sign bits → bucket id; queries search only their
@@ -333,15 +376,12 @@ object Similarity {
     val corpusB = e.withColumn("bucket", bucket(col("embedding")))
     val queriesB = queryVectors(s, d).withColumnRenamed("q", "qv")
       .withColumn("qbucket", bucket(col("qv")))
-    val cand = corpusB.join(broadcast(queriesB),
-      col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cand.select(col("query_id"), col("vec_id"), col("bucket"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(cellProbe(corpusB, queriesB, cosR, "cos_r", "bucket", "qbucket"), "cos_r", 5)
   }
+
+  /** The float candidate score of every probe and exact form: the
+    * round-4 cosine of query `qv` and corpus `embedding`. */
+  private def cosR: Column = round(dot(col("qv"), col("embedding")), 4)
 
   /** IVF coarse quantizer: a dynamic-k deterministic centroid sample
     * (k = ⌈n/TargetCellSize⌉ — cells stay bounded as the corpus
@@ -359,14 +399,7 @@ object Similarity {
       cellOf(col("embedding")).as("cell"), col("embedding"))
     val qcells = queryVectors(s, d).withColumnRenamed("q", "qv")
       .select(col("query_id"), cellOf(col("qv")).as("qcell"), col("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(cellProbe(cells, qcells, cosR, "cos_r"), "cos_r", 5)
   }
 
   /** Multi-probe hyperplane LSH: each query searches its own bucket
@@ -387,14 +420,7 @@ object Similarity {
       .withColumn("qbucket", bucket(col("qv")))
       .withColumn("probe_bucket", explode(array(
         col("qbucket") +: (0 until 8).map(i => expr(s"qbucket ^ ${1L << i}")): _*)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    corpusB.join(broadcast(probes),
-        col("bucket") === col("probe_bucket") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("bucket"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(cellProbe(corpusB, probes, cosR, "cos_r", "bucket", "probe_bucket"), "cos_r", 5)
   }
 
   /** IVF with multi-probe (nprobe=2): each query searches its 2
@@ -412,27 +438,17 @@ object Similarity {
     val cells = e.select(col("vec_id"),
       graft.functions.NearestCentroid.nearest(col("embedding"), cents).as("cell"),
       col("embedding"))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("cent_id").asc)
     // probe ranking reuses the collected set — a local relation, not
     // another corpus orderBy+limit scan
     val centDf = cents.toSeq.map { case (id, v) => (id, v.toSeq) }
       .toDF("cent_id", "cv")
-    val qprobes = queryVectors(s, d).withColumnRenamed("q", "qv")
-      .crossJoin(broadcast(centDf))
-      .select(col("query_id"), col("qv"), col("cent_id"),
-        round(dot(col("qv"), col("cv")), 4).as("pcos"))
-      .withColumn("probe_rank", row_number().over(pw))
-      .filter(col("probe_rank") <= nprobe)
+    val qprobes = topK(queryVectors(s, d).withColumnRenamed("q", "qv")
+        .crossJoin(broadcast(centDf))
+        .select(col("query_id"), col("qv"), col("cent_id"),
+          round(dot(col("qv"), col("cv")), 4).as("pcos")),
+        "pcos", nprobe, id = "cent_id", rank = "probe_rank")
       .select(col("query_id"), col("qv"), col("cent_id").as("qcell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cells.join(broadcast(qprobes),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(cellProbe(cells, qprobes, cosR, "cos_r"), "cos_r", 5)
   }
 
   /** Lowercase-hex MD5 — the driver-side twin of Spark/DuckDB `md5()`
@@ -536,14 +552,7 @@ object Similarity {
       cellOf(col("embedding")).as("cell"), col("embedding"))
     val qcells = queryVectors(s, d).withColumnRenamed("q", "qv")
       .select(col("query_id"), cellOf(col("qv")).as("qcell"), col("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(cellProbe(cells, qcells, cosR, "cos_r"), "cos_r", 5)
   }
 
   /** MULTI-ASSIGNMENT IVF-IMI (Jégou et al., RR-7020 §5): every CORPUS
@@ -569,14 +578,7 @@ object Similarity {
     val cellOf = imiCellOf(s, d) _
     val qcells = queryVectors(s, d).withColumnRenamed("q", "qv")
       .select(col("query_id"), cellOf(col("qv")).as("qcell"), col("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("qv"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(cellProbe(cells, qcells, cosR, "cos_r"), "cos_r", 5)
   }
 
   /** Per-vector symmetric int8 scalar quantization: scale = 127/max|v|,
@@ -642,43 +644,40 @@ object Similarity {
     when(col("c_scale") === 0.0 || col("q_scale") === 0.0, lit(0.0))
       .otherwise(round(qdot.cast(DoubleType) / (col("c_scale") * col("q_scale")), 4))
 
+  /** Integer dot of corpus codes `cq` and query codes `qq` — the native
+    * codegen kernel (functions/DotI8Expr.scala); the interpreted HOF
+    * fold was 3.4x the float path's native kernel. */
+  private[graft] def qdotI8: Column = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
+
+  /** The int8 candidate score: the zero-guarded dequantized cosine. */
+  private[graft] def cosI8: Column = cosQ(qdotI8)
+
+  /** Corpus rows (vec_id, cell, c_scale, cq) of an int8 cell index. */
+  private[graft] def int8Rows(df: DataFrame, cellOf: Column => Column): DataFrame = {
+    val (sc, q) = quantizeCols(col("embedding"))
+    df.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
+      sc.as("c_scale"), q.as("cq"))
+  }
+
+  /** Probe rows (query_id, qcell, q_scale, qq) for a (query_id,
+    * embedding) batch. The quantizer is bound ONCE per plan: two
+    * quantizeCols calls would build the expression twice and lean on
+    * codegen subexpression elimination to dodge double per-row work. */
+  private[graft] def int8Probes(queries: DataFrame, cellOf: Column => Column): DataFrame = {
+    val (sc, q) = quantizeCols(col("embedding"))
+    queries.select(col("query_id"), cellOf(col("embedding")).as("qcell"),
+      sc.as("q_scale"), q.as("qq"))
+  }
+
   def simTopkInt8(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val k = 10
     val e = embeddings(s, d)
     val (qsc, qq) = quantizeCols(col("embedding"))
     val corpus = e.select(col("vec_id"), qsc.as("c_scale"), qq.as("cq"))
     val queries = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"),
-        quantizeCols(col("embedding"))._1.as("q_scale"),
-        quantizeCols(col("embedding"))._2.as("qq"))
-    // native codegen integer dot (functions/DotI8Expr.scala) — the
-    // interpreted HOF fold was 3.4x the float path's native kernel
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), qdot.as("qdot"),
-        cosQ(qdot).as("cos_q"))
-    // same two-level top-k as simTopk: per-partition bounded heaps, so
-    // only k·partitions·queries rows reach the final rank window — no
-    // corpus-sized shuffle into #queries reducers
-    val worstFirst: Ordering[(Double, Long, Long)] =
-      Ordering.Tuple3(Ordering.Double.TotalOrdering.reverse, Ordering.Long, Ordering.Long)
-    val partial = scored.as[(Long, Long, Long, Double)].mapPartitions { it =>
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long, Long)]]
-      it.foreach { case (q, v, dq, c) =>
-        val h = heaps.getOrElseUpdate(q,
-          scala.collection.mutable.PriorityQueue.empty(worstFirst))
-        if (h.size < k) h.enqueue((c, v, dq))
-        else if (worstFirst.gt(h.head, (c, v, dq))) { h.dequeue(); h.enqueue((c, v, dq)) }
-      }
-      heaps.iterator.flatMap { case (q, h) =>
-        h.iterator.map { case (c, v, dq) => (q, v, dq, c) } }
-    }.toDF("query_id", "vec_id", "qdot", "cos_q")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    partial.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .select(col("vec_id").as("query_id"), qsc.as("q_scale"), qq.as("qq"))
+    boundedTopK(corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), qdotI8.as("qdot"), cosI8.as("cos_q")),
+      "cos_q", 10)
   }
 
   /** IVF + int8 — the production ANN layout at 100 TB: the coarse
@@ -695,23 +694,13 @@ object Similarity {
   def simIvfInt8(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d)
     val cellOf = imiCellOf(s, d) _
-    val (csc, cq) = quantizeCols(col("embedding"))
-    val cells = e.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
-      csc.as("c_scale"), cq.as("cq"))
-    val qcells = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), cellOf(col("embedding")).as("qcell"),
-        quantizeCols(col("embedding"))._1.as("q_scale"),
-        quantizeCols(col("embedding"))._2.as("qq"))
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    cells.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        cosQ(qdot).as("cos_q"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(cellProbe(int8Rows(e, cellOf), int8Probes(queriesBelow(e, 3), cellOf),
+      cosI8, "cos_q"), "cos_q", 5)
   }
+
+  /** Corpus vectors `vec_id < n` as a (query_id, embedding) batch. */
+  private def queriesBelow(e: DataFrame, n: Int): DataFrame =
+    e.filter(col("vec_id") < n).select(col("vec_id").as("query_id"), col("embedding"))
 
   // ---- product quantization (IVF-PQ) ---------------------------------
 
@@ -895,13 +884,8 @@ object Similarity {
     * int8, which is what the byte budget of a 10B-vector serve tier
     * actually buys. Ranking uses the rounded ADC score (tie: vec_id),
     * mirrored bit-for-bit by the oracle's chained-CTE replay. */
-  def simIvfPq(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    simIvfPqAdcScored(s, d)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
+  def simIvfPq(s: SparkSession, d: String): DataFrame =
+    topK(simIvfPqAdcScored(s, d), "adc_r", 5)
 
   /** IVF-PQ at the FINER 16×4×16 geometry (`GeomPq16`) — identical
     * pipeline (same routing, same residuals, same Lloyd training
@@ -911,16 +895,9 @@ object Similarity {
     * residual strictly better than any rotation can (rotation only
     * redistributes variance the subspaces already share equally), and
     * RECALL_r12 measures the lift at equal probe budget. */
-  def simIvfPq16(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    simIvfPqAdcScored(s, d, GeomPq16)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
+  def simIvfPq16(s: SparkSession, d: String): DataFrame =
+    topK(simIvfPqAdcScored(s, d, GeomPq16), "adc_r", 5)
 
-  /** The shared ADC-scored candidate relation (query_id, vec_id,
-    * cell, adc_r) both PQ forms rank. */
   /** Query-side PQ serve table: cell via the shipped expression, LUT
     * + the query-to-centroid dot (the constant term of the residual
     * decomposition dot(q,x) = dot(q,c) + dot(q,res)) on the driver —
@@ -945,12 +922,12 @@ object Similarity {
         StructField("qcdot", DoubleType))))
   }
 
+  /** The ADC-scored candidate relation (query_id, vec_id, cell,
+    * adc_r) every PQ form ranks. */
   private def pqAdcScoredOver(codes: DataFrame, qcells: DataFrame,
       g: PqGeom = GeomPq8): DataFrame =
-    codes.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(col("qcdot") + adcCol(col("lut"), col("codes"), g), 4).as("adc_r"))
+    cellProbe(codes, qcells,
+      round(col("qcdot") + adcCol(col("lut"), col("codes"), g), 4), "adc_r")
 
   private def simIvfPqAdcScored(s: SparkSession, d: String,
       g: PqGeom = GeomPq8): DataFrame = {
@@ -978,11 +955,7 @@ object Similarity {
     * choice, not a semantic one. */
   def simIvfPqBucketed(s: SparkSession, d: String): DataFrame = {
     val idx = bucketedIndexTable(s, d).select(col("vec_id"), col("cell"), col("codes"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    pqAdcScoredOver(idx, pqQueryTable(s, d))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topK(pqAdcScoredOver(idx, pqQueryTable(s, d)), "adc_r", 5)
   }
 
   /** ADC shortlist size before the exact re-rank (10× the served k —
@@ -1001,23 +974,15 @@ object Similarity {
     * for only R rows per query (R/cell_size of the I/O, 80× under a
     * 4096-member cell). Recall vs exact is then routing-bounded
     * (measured in RECALL: rerank ≈ the IMI ceiling). */
-  def simIvfPqRerank(s: SparkSession, d: String): DataFrame = {
-    val e = embeddings(s, d)
-    val adcW = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    val short = simIvfPqAdcScored(s, d)
-      .withColumn("arnk", row_number().over(adcW))
-      .filter(col("arnk") <= PqRerankR)
-    val qv = queryVectors(s, d)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    short.join(e, Seq("vec_id"))
-      .join(broadcast(qv), Seq("query_id"))
+  def simIvfPqRerank(s: SparkSession, d: String): DataFrame =
+    topK(pqShortlist(s, d).join(embeddings(s, d), Seq("vec_id"))
+      .join(broadcast(queryVectors(s, d)), Seq("query_id"))
       .select(col("query_id"), col("vec_id"), col("cell"),
-        round(dot(col("q"), col("embedding")), 4).as("cos_r"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
+        round(dot(col("q"), col("embedding")), 4).as("cos_r")), "cos_r", 5)
+
+  /** The ADC top-`PqRerankR` shortlist both re-rank forms re-score. */
+  private def pqShortlist(s: SparkSession, d: String): DataFrame =
+    topK(simIvfPqAdcScored(s, d), "adc_r", PqRerankR, rank = "arnk")
 
   /** IVF-PQ with INT8 re-rank (r11, VERDICT item 6) — the
     * byte-budget-COMPLETE two-stage serve: the ADC top-`PqRerankR`
@@ -1033,25 +998,14 @@ object Similarity {
     * `sim_ivf_int8` kernel verbatim (exact integer dot, cosQ). */
   def simIvfPqRerankInt8(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d)
-    val adcW = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_r").desc, col("vec_id").asc)
-    val short = simIvfPqAdcScored(s, d)
-      .withColumn("arnk", row_number().over(adcW))
-      .filter(col("arnk") <= PqRerankR)
-    val (csc, cq) = quantizeCols(col("embedding"))
-    val corpus8 = e.select(col("vec_id"), csc.as("c_scale"), cq.as("cq"))
+    val (sc, q) = quantizeCols(col("embedding"))
+    val corpus8 = e.select(col("vec_id"), sc.as("c_scale"), q.as("cq"))
     val q8 = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"),
-        quantizeCols(col("embedding"))._1.as("q_scale"),
-        quantizeCols(col("embedding"))._2.as("qq"))
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    short.join(corpus8, Seq("vec_id"))
+      .select(col("vec_id").as("query_id"), sc.as("q_scale"), q.as("qq"))
+    topK(pqShortlist(s, d).join(corpus8, Seq("vec_id"))
       .join(broadcast(q8), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"), cosQ(qdot).as("cos_q"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+      .select(col("query_id"), col("vec_id"), col("cell"), cosI8.as("cos_q")),
+      "cos_q", 5)
   }
 
 
@@ -1157,32 +1111,9 @@ object Similarity {
 
   private[graft] def simIvfInt8BucketedFor(s: SparkSession, d: String,
       qBound: Int): DataFrame =
-    int8BucketedProbe(s, d, embeddings(s, d).filter(col("vec_id") < qBound)
-      .select(col("vec_id").as("query_id"), col("embedding")))
-
-  /** One serve probe of a query set against the persisted index: the
-    * QUERY side runs the quantizer expressions, broadcasts into the
-    * bucketed code scan, integer-dot scores, and window-top-5s. Shared
-    * by the batch entry and the streaming serve loop — the loop is
-    * semantically this probe applied per micro-batch. */
-  private def int8BucketedProbe(s: SparkSession, d: String,
-      qset: DataFrame): DataFrame = {
-    val idx = bucketedIndexTable(s, d)
-    val cellOf = imiCellOf(s, d) _
-    val qcells = qset
-      .select(col("query_id"), cellOf(col("embedding")).as("qcell"),
-        quantizeCols(col("embedding"))._1.as("q_scale"),
-        quantizeCols(col("embedding"))._2.as("qq"))
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    idx.join(broadcast(qcells),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        cosQ(qdot).as("cos_q"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
+    topK(cellProbe(bucketedIndexTable(s, d),
+      int8Probes(queriesBelow(embeddings(s, d), qBound), imiCellOf(s, d)),
+      cosI8, "cos_q"), "cos_q", 5)
 
   /** ONLINE retrieval — the batch ANN serve run as the production
     * CONTINUOUS loop: query vectors ARRIVE as a stream (three
@@ -1214,7 +1145,8 @@ object Similarity {
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
       }
-      bucketedIndexTable(s, d) // index is write-once ETL, built before the stream
+      val idx = bucketedIndexTable(s, d) // write-once ETL, built before the stream
+      val cellOf = imiCellOf(s, d) _
       val results = new graft.streaming.SubBatchState[DataFrame]
       val stream = s.readStream.schema(qs.schema)
         .option("maxFilesPerTrigger", "1")
@@ -1226,7 +1158,8 @@ object Similarity {
           subs.foreach { k =>
             val qset = mb.filter(col("sub_batch") === k)
               .select(col("vec_id").as("query_id"), col("embedding"))
-            results.put(k, int8BucketedProbe(s, d, qset)
+            results.put(k, topK(cellProbe(idx, int8Probes(qset, cellOf),
+                cosI8, "cos_q"), "cos_q", 5)
               .withColumn("sub_batch", lit(k))
               .localCheckpoint(true))
           }
@@ -1251,85 +1184,6 @@ object Similarity {
   }
 
   // ---- incremental index MAINTENANCE (frozen quantizer) --------------
-
-  /** The frozen-quantizer serve kernel: candidates read from
-    * `indexRows(vec_id, cell, c_scale, cq)` (however they are stored),
-    * probed by `qcells(query_id, qcell, q_scale, qq)` — the
-    * `sim_ivf_int8` probe shape with the corpus side abstracted, so
-    * the maintained table and the spec's direct projection provably
-    * serve the same relation. */
-  private[graft] def frozenInt8Serve(indexRows: DataFrame,
-      qcells: DataFrame, excludeSelf: Boolean = true): DataFrame = {
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    // excludeSelf is the CORPUS-QUERY convention (query ids ARE corpus
-    // vec_ids, so a vector must not match itself). An AD-HOC query
-    // batch must pass false: its query_id namespace is the caller's,
-    // and a collision with a corpus vec_id would silently drop that
-    // vector from the candidate set (r15 ADVICE; ServeSessionSpec
-    // pins the colliding-id case).
-    val joinCond =
-      if (excludeSelf)
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id")
-      else col("cell") === col("qcell")
-    indexRows.join(broadcast(qcells), joinCond)
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        cosQ(qdot).as("cos_q"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-  }
-
-  /** Batched form of [[frozenInt8Serve]] for LARGE query batches —
-    * identical relation, different physical top-k (r15 VERDICT
-    * item 6). The window form shuffles and sorts EVERY candidate pair
-    * (Σ over probed cells of |cell| · |queries probing it| — ~20 M
-    * rows for a 4096-query probe of a 5 M-vector index), which is the
-    * measured wall behind the 217 qps serve_batched plateau; the scan
-    * itself is already minimal (the pinned relation streams ONCE per
-    * probe through the broadcast hash join, and queries sharing a
-    * cell share that pass by construction). This form cuts the rank
-    * shuffle with the sim_topk two-level bounded-heap shape:
-    * per-partition heaps keep each query's local top-5, so the
-    * exchange carries ≤ 5 · |queries| · partitions pre-combined rows
-    * and the final window ranks that bounded set. Ordering
-    * (cos_q desc, vec_id asc) is total, so heap and window agree on
-    * every row including ties — semantics pinned against the window
-    * kernel in ServeSessionSpec. */
-  private[graft] def frozenInt8ServeBatched(indexRows: DataFrame,
-      qcells: DataFrame, excludeSelf: Boolean = true): DataFrame = {
-    val spark = indexRows.sparkSession
-    import spark.implicits._
-    val k = 5
-    val qdot = graft.functions.DotI8.dotI8(col("cq"), col("qq"))
-    val joinCond =
-      if (excludeSelf)
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id")
-      else col("cell") === col("qcell")
-    val scored = indexRows.join(broadcast(qcells), joinCond)
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        cosQ(qdot).as("cos_q"))
-    // worst-first heap ordering on the SAME total order as the window
-    // (cos_q desc, vec_id asc): the head is the row that falls out
-    val worstFirst: Ordering[(Double, Long, Long)] =
-      Ordering.by[(Double, Long, Long), (Double, Long)](t => (t._1, t._2))(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long))
-    val partial = scored.as[(Long, Long, Long, Double)].mapPartitions { it =>
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long, Long)]]
-      it.foreach { case (q, v, c, s) =>
-        val h = heaps.getOrElseUpdate(q,
-          scala.collection.mutable.PriorityQueue.empty(worstFirst))
-        if (h.size < k) h.enqueue((s, v, c))
-        else if (worstFirst.gt(h.head, (s, v, c))) { h.dequeue(); h.enqueue((s, v, c)) }
-      }
-      heaps.iterator.flatMap { case (q, h) =>
-        h.iterator.map { case (s, v, c) => (q, v, c, s) } }
-    }.toDF("query_id", "vec_id", "cell", "cos_q")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("vec_id").asc)
-    partial.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
 
   /** CONTINUOUS ANN-index maintenance — the dense sibling of
     * `stream_bm25_maintain` and the write path `stream_ann_serve`
@@ -1365,11 +1219,6 @@ object Similarity {
     // FROZEN: trained on the standing base (k from the base size)
     val (supers, groups) = twoLevelIndexOf(collectCentroidsOf(e.filter(!isArr)))
     def cellOf(v: Column): Column = graft.functions.ImiCell2.cell(v, supers, groups)
-    def rowsOf(df: DataFrame): DataFrame = {
-      val (sc, q) = quantizeCols(col("embedding"))
-      df.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
-        sc.as("c_scale"), q.as("cq"))
-    }
     val workDir = java.nio.file.Files.createTempDirectory("graft_annmaint")
     try {
       val streamDir = workDir.resolve("stream")
@@ -1387,7 +1236,7 @@ object Similarity {
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
       }
-      val p0 = rowsOf(e.filter(!isArr))
+      val p0 = int8Rows(e.filter(!isArr), cellOf)
       val nb = derivedBuckets(s, p0.count(), "spark.graft.ann.maintain.buckets")
       val pt = new graft.streaming.PartitionedTable(
         workDir.resolve("idx"), "cell", nb)
@@ -1459,7 +1308,7 @@ object Similarity {
             if (pt.lastTxn(s"annidx.seg$k").isEmpty &&
                 !runs.exists(_._1.contains(k))) {
               val seg = segDir.resolve(f"seg$k%04d")
-              rowsOf(mb.filter(col("sub_batch") === k).drop("sub_batch"))
+              int8Rows(mb.filter(col("sub_batch") === k).drop("sub_batch"), cellOf)
                 .write.mode("overwrite").parquet(seg.toString)
               segs.put(k, seg.toString)
               folder.onSegment(
@@ -1473,12 +1322,8 @@ object Similarity {
       q.awaitTermination()
       folder.finish()
       pt.compact(s)
-      val qcells = e.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("query_id"),
-          cellOf(col("embedding")).as("qcell"),
-          quantizeCols(col("embedding"))._1.as("q_scale"),
-          quantizeCols(col("embedding"))._2.as("qq"))
-      frozenInt8Serve(pt.read(s), qcells).localCheckpoint(true)
+      topK(cellProbe(pt.read(s), int8Probes(queriesBelow(e, 3), cellOf),
+        cosI8, "cos_q"), "cos_q", 5).localCheckpoint(true)
       // fence cleared in finally so an exception mid-scope can't leave
       // it installed (Replication.catchUp's discipline)
       } finally { pt.clearFence() }
@@ -1502,24 +1347,14 @@ object Similarity {
     val e = embeddings(s, d)
     val q = e.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sc").desc, col("vec_id").asc)
-    val exact = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("qv"), col("embedding")), 4).as("sc"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
+    val exact = topK(e.join(broadcast(q), col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), cosR.as("sc")), "sc", 10)
       .select(col("query_id"), col("vec_id"), col("rnk").as("true_rnk"))
     val cellOf = imiCellOf(s, d) _
     val cells = e.select(col("vec_id"), cellOf(col("embedding")).as("cell"),
       col("embedding"))
-    val qc = e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), cellOf(col("embedding")).as("qcell"),
-        col("embedding").as("qv"))
-    val ann = cells.join(broadcast(qc),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("qv"), col("embedding")), 4).as("sc"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
+    val ann = topK(cellProbe(cells, q.withColumn("qcell", cellOf(col("qv"))), cosR, "sc"),
+        "sc", 10)
       .select(col("query_id"), col("vec_id"), col("rnk").as("ann_rnk"))
     // coalesce: on a degenerate corpus the exact∩ANN join is empty and a
     // bare sum yields NULL where the oracle's coalesce(sum(..), 0) yields

@@ -331,11 +331,7 @@ object Replication {
         !alive || now - parts(1).toLong > StaleAfterMillis
       } catch { case _: Exception => now - mtime > StaleAfterMillis }
     }
-    def refresh(ch: FileChannel): Unit = {
-      ch.truncate(0L)
-      ch.write(java.nio.ByteBuffer.wrap(payload), 0L)
-      ch.force(true)
-    }
+    def refresh(ch: FileChannel): Unit = overwriteLock(ch, payload)
     def acquire(): FileChannel = {
       var attempt = 0
       while (attempt < 5) {
@@ -420,11 +416,8 @@ object Replication {
       ch: java.nio.channels.FileChannel, generation: Long): Unit = {
     val bytes =
       s"0 ${System.currentTimeMillis} released $generation".getBytes("UTF-8")
-    try {
-      ch.truncate(0L)
-      ch.write(java.nio.ByteBuffer.wrap(bytes), 0L)
-      ch.force(true)
-    } catch { case _: Exception =>
+    try overwriteLock(ch, bytes)
+    catch { case _: Exception =>
       // the fallback must NOT go through an InterruptibleChannel: the
       // releasing thread often still CARRIES the pending interrupt that
       // closed the shared channel in the first place, and Files.write
@@ -433,15 +426,35 @@ object Replication {
       // heartbeat payload and costing the successor a full staleness-
       // horizon wait on a clean release (r15 ADVICE). Clear the
       // interrupt for the write, restore it after (the owner of the
-      // interrupt protocol is the caller), and write via FileOutputStream
-      // whose write path is not interrupt-sensitive.
+      // interrupt protocol is the caller), and write via
+      // RandomAccessFile, whose write path is not interrupt-sensitive,
+      // in overwriteLock's write-then-truncate order.
       val wasInterrupted = Thread.interrupted()
       try {
-        val os = new java.io.FileOutputStream(lock.toFile, false)
-        try { os.write(bytes); os.getFD.sync() } finally os.close()
+        val raf = new java.io.RandomAccessFile(lock.toFile, "rw")
+        try { raf.write(bytes); raf.setLength(bytes.length.toLong); raf.getFD.sync() }
+        finally raf.close()
       } catch { case _: Exception => () }
       finally if (wasInterrupted) Thread.currentThread().interrupt()
     }
+  }
+
+  /** Replace the lock file's payload in place: write at offset 0, THEN
+    * cut the file to the payload's length, then force. A concurrent
+    * reader (`WriterLease.stillHeld`, polled before every fenced
+    * commit) therefore never sees an empty file: truncate-first left a
+    * window where the live holder's own fence check read no nonce and
+    * refused the commit. A heartbeat payload keeps its length (same
+    * pid, nonce and generation; 13-digit millis), so it overwrites the
+    * previous one exactly; only the shorter release tombstone leaves a
+    * stale tail until the truncate, while the OS lock is still held.
+    * The rewrite is in place, never a rename: the OS lock is held on
+    * this inode. */
+  private[graft] def overwriteLock(ch: java.nio.channels.FileChannel,
+      bytes: Array[Byte]): Unit = {
+    ch.write(java.nio.ByteBuffer.wrap(bytes), 0L)
+    ch.truncate(bytes.length.toLong)
+    ch.force(true)
   }
 
   /** A lease directory with NO live holder: the lock file is absent or

@@ -110,6 +110,33 @@ class LockSpec extends AnyFunSuite {
     }
   }
 
+  test("heartbeat rewrite never shows a reader an empty lock or a payload without the nonce") {
+    // the holder's own fence check (WriterLease.stillHeld) reads LOCK
+    // while the heartbeat rewrites it; a truncate-then-write rewrite
+    // let that read see an empty file and refuse a live holder's commit
+    val dir = lockDir()
+    val lock = dir.resolve("LOCK")
+    val nonce = java.util.UUID.randomUUID.toString
+    def payload(i: Long) =
+      s"${ProcessHandle.current.pid} ${1700000000000L + i} $nonce 1".getBytes("UTF-8")
+    Files.write(lock, payload(0))
+    val ch = java.nio.channels.FileChannel.open(lock,
+      java.nio.file.StandardOpenOption.WRITE, java.nio.file.StandardOpenOption.READ)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writes = new java.util.concurrent.atomic.AtomicLong(0)
+    val writer = new Thread(() =>
+      while (!done.get) Replication.overwriteLock(ch, payload(writes.incrementAndGet())))
+    writer.start()
+    val reads = 20000
+    val misses =
+      try (1 to reads).count { _ =>
+        !new String(Files.readAllBytes(lock), "UTF-8").trim
+          .split("\\s+").lift(2).contains(nonce)
+      } finally { done.set(true); writer.join(); ch.close() }
+    assert(writes.get > 100, s"the writer must overlap the reads (${writes.get} rewrites)")
+    assert(misses === 0, s"$misses of $reads reads found no nonce")
+  }
+
   test("release is idempotent against a successor: a finished run never deletes the next holder's lock") {
     val dir = lockDir()
     assert(Replication.withWriterLock(dir) { true })

@@ -37,25 +37,14 @@ class RetrievalSpec extends AnyFunSuite {
     assert(edge === 0)
   }
 
-  test("totalsFromPostings equals totalsOf (r18: totals derived from the postings pass)") {
-    // real corpus
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.01")
-    val a = Retrieval.totalsOf(docs).as[(Long, Long)].collect().head
-    val b = Retrieval.totalsFromPostings(Retrieval.postingsOf(docs))
-      .as[(Long, Long)].collect().head
-    assert(a === b)
-    // boundary shapes: under-gram docs (0 grams), exactly-k, repeats
-    // (tf > 1 must still sum to dl), null text
+  test("totalsOf: under-gram, exactly-k, repeated-gram and null-text docs count by hand") {
     val edge = Seq(
-      (1L, "a b", "en", "s", 3L),          // 2 words < GramK: 0 grams
+      (1L, "a b", "en", "s", 3L),          // 2 words < GramK: not counted
       (2L, "a b c", "en", "s", 5L),        // exactly k: 1 gram
-      (3L, "a b a b a b a b", "en", "s", 15L), // repeated grams, tf>1
-      (4L, null: String, "en", "s", 0L))
+      (3L, "a b a b a b a b", "en", "s", 15L), // 8 words, repeated grams: 6
+      (4L, null: String, "en", "s", 0L))   // null text: not counted
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val ea = Retrieval.totalsOf(edge).as[(Long, Long)].collect().head
-    val eb = Retrieval.totalsFromPostings(Retrieval.postingsOf(edge))
-      .as[(Long, Long)].collect().head
-    assert(ea === eb)
+    assert(Retrieval.totalsOf(edge).as[(Long, Long)].collect().head === ((2L, 7L)))
   }
 
   test("bm25: hand-built corpus ranks by shared-gram weight, misses drop out") {

@@ -15,6 +15,11 @@ class ServeSessionSpec extends AnyFunSuite {
   private def rowsOf(df: DataFrame): Set[String] =
     df.collect().map(_.mkString("")).toSet
 
+  /** The one-shot window serve of an int8 index: cell probe, then topK. */
+  private def oneShotServe(rows: DataFrame, qcells: DataFrame): DataFrame =
+    Similarity.topK(Similarity.cellProbe(rows, qcells,
+      Similarity.cosI8, "cos_q"), "cos_q", 5)
+
   test("ANN session serve == one-shot sim_ivf_int8_bucketed on the same query ids") {
     val session = ServeSession.ann(spark, d)
     try {
@@ -127,7 +132,7 @@ class ServeSessionSpec extends AnyFunSuite {
         // refresh re-pins to the post-fold state — a fresh one-shot
         val s1 = sess.refresh()
         assert(s1 > s0)
-        val oneShot = Similarity.frozenInt8Serve(pt.read(spark), qcellsOf(queries))
+        val oneShot = oneShotServe(pt.read(spark), qcellsOf(queries))
         assert(rowsOf(sess.serveIds(queries)) === rowsOf(oneShot))
         // refresh when already current is a stable no-op
         assert(sess.refresh() === s1)
@@ -267,7 +272,7 @@ class ServeSessionSpec extends AnyFunSuite {
           assert(sess.serveIds(queries).count() > 0)
         }
         // final state equals a fresh one-shot over the current table
-        val oneShot = Similarity.frozenInt8Serve(pt.read(spark), qcellsOf(queries))
+        val oneShot = oneShotServe(pt.read(spark), qcellsOf(queries))
         assert(rowsOf(sess.serveIds(queries)) === rowsOf(oneShot))
       } finally sess.close()
     } finally PartitionedTable.deleteRecursively(wd)

@@ -36,6 +36,46 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("rank kernel: boundedTopK == topK when score ties straddle the cut across partitions") {
+    // (query_id, vec_id, cell, cos_r), laid out 4 rows per partition:
+    // query 1 ties 0.7 over vec_ids {3, 7, 9} in partitions 3, 1, 0;
+    // query 2 ties 0.6 over {2, 6, 11, 12} in partitions 3, 2, 0, 1 —
+    // the winning (smallest) ids sit in the LAST partition
+    val rows = Seq(
+      (1L, 9L, 0.7), (1L, 1L, 0.5), (1L, 15L, 0.3), (2L, 11L, 0.6),
+      (1L, 7L, 0.7), (2L, 12L, 0.6), (2L, 10L, 0.2), (2L, 13L, 0.1),
+      (1L, 5L, 0.9), (1L, 14L, 0.2), (2L, 6L, 0.6), (2L, 16L, 0.05),
+      (1L, 3L, 0.7), (2L, 2L, 0.6), (1L, 17L, 0.1), (2L, 4L, 0.8))
+    val scored = spark.sparkContext.parallelize(rows, 4)
+      .map { case (q, v, c) => (q, v, v * 10, c) }
+      .toDF("query_id", "vec_id", "cell", "cos_r")
+    assert(scored.rdd.getNumPartitions === 4)
+    val partOf = scored.select(spark_partition_id(), col("query_id"), col("vec_id"))
+      .as[(Int, Long, Long)].collect().map(t => (t._2, t._3) -> t._1).toMap
+    assert(Seq(3L, 7L, 9L).map(v => partOf((1L, v))).distinct.size === 3)
+    assert(Seq(2L, 6L, 11L, 12L).map(v => partOf((2L, v))).distinct.size === 4)
+
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._5)).toSeq
+    (1 to 4).foreach { k =>
+      val heap = Similarity.boundedTopK(scored, "cos_r", k)
+      val window = Similarity.topK(scored, "cos_r", k)
+      assert(heap.columns.toSeq === Seq("query_id", "vec_id", "cell", "cos_r", "rnk"))
+      assert(heap.schema === window.schema)
+      assert(heap.schema.fields.dropRight(1).toSeq === scored.schema.fields.toSeq)
+      // reference: score desc, then id asc, ranks 1..k per query
+      val expected = rows.groupBy(_._1).toSeq.flatMap { case (_, rs) =>
+        rs.sortBy(r => (-r._3, r._2)).take(k).zipWithIndex.map { case ((q, v, c), i) =>
+          (q, v, v * 10, c, i + 1) }
+      }.sortBy(r => (r._1, r._5))
+      assert(rowsOf(heap) === expected, s"heap k=$k")
+      assert(rowsOf(window) === expected, s"window k=$k")
+    }
+    // at k=2 the cut falls inside both tie groups: ids break them
+    assert(rowsOf(Similarity.boundedTopK(scored, "cos_r", 2)).map(r => (r._1, r._2)) ===
+      Seq((1L, 5L), (1L, 3L), (2L, 4L), (2L, 2L)))
+  }
+
   test("int8 quantization: codes bounded to ±127, the max-|v| element saturates, scale > 0") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val (sc, q) = Similarity.quantizeCols(col("embedding"))
@@ -573,7 +613,8 @@ class SimilaritySpec extends AnyFunSuite {
       .select(col("vec_id").as("query_id"), cellOf(col("embedding")).as("qcell"),
         Similarity.quantizeCols(col("embedding"))._1.as("q_scale"),
         Similarity.quantizeCols(col("embedding"))._2.as("qq"))
-    val expected = Similarity.frozenInt8Serve(direct, qcells)
+    val expected = Similarity.topK(Similarity.cellProbe(direct, qcells,
+        Similarity.cosI8, "cos_q"), "cos_q", 5)
       .select("query_id", "vec_id", "cell", "cos_q", "rnk")
       .as[(Long, Long, Long, Double, Int)].collect().toSet
     assert(maintained === expected && maintained.nonEmpty)

@@ -25,12 +25,17 @@ for i in $(seq 1 "$PAIRS"); do
   for side in a b; do
     d=$DIRA; cpus=$CPUS_A; [ "$side" = b ] && { d=$DIRB; cpus=$CPUS_B; }
     echo "[ab18] pair $i side $side $(date +%H:%M:%S)"
+    # each invocation writes its own file and must be non-empty before
+    # it joins the side's series: a failed invocation in ANY pair must
+    # not masquerade as data (checking the cumulative file only caught
+    # a failure in pair 1)
+    one=$(mktemp)
     (cd "$d" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$cpus" \
        SPARK_GRAFT_ONLY="$Q" SPARK_GRAFT_RUNS="$RUNS" \
        sbt -batch "runMain graft.Bench" 2>/dev/null \
-       | grep '"metric"' >>"/tmp/ab18_${TAG}_$side.jsonl")
-    # a failed invocation must not masquerade as data (r17 ADVICE)
-    [ -s "/tmp/ab18_${TAG}_$side.jsonl" ] || { echo "[ab18] EMPTY side $side pair $i"; exit 1; }
+       | grep '"metric"' >"$one")
+    [ -s "$one" ] || { echo "[ab18] EMPTY side $side pair $i"; rm -f "$one"; exit 1; }
+    cat "$one" >>"/tmp/ab18_${TAG}_$side.jsonl"; rm -f "$one"
   done
 done
 if [ -n "$OUT" ]; then
